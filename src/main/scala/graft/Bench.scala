@@ -6,9 +6,14 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_SF_DIR, forcing full materialization through the noop sink
   * (count() would let Catalyst prune the projections we mean to measure).
   * Prints the full JSON line {"metric":...,"value":N,"unit":"sec",
-  * "queries":{...},"classes":{...},"subtotals":{...},"sf":...} followed
-  * by a compact total-only repeat of the same metric as the final stdout
-  * line (tail-capture safe).
+  * "queries":{...},"classes":{...},"subtotals":{...},"isolated":{...},
+  * "failed":[...],"sf":...} followed by a compact total-only repeat of
+  * the same metric as the final stdout line (tail-capture safe).
+  *
+  * A gate that throws is listed under "failed" and counts nowhere else
+  * (not in queries, subtotals or the total — its partial time would
+  * read as a speed-up); it is not re-run, and Bench exits non-zero
+  * after printing.
   *
   * MEASUREMENT DISCIPLINE (SCALE.md §Bench): the bench host's page-cache
   * state is the dominant noise source — a cold first pass lands 1.2×
@@ -193,16 +198,22 @@ object Bench {
     SparkEntry.prewarmSharedFixtures(spark, sfDir)
     clearSessionState()
 
+    // a failed run has no credible time (it stopped wherever it threw
+    // — a crash must never read as a speed-up): None, never re-run
     def once(name: String, fn: (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double = {
+        org.apache.spark.sql.DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
+      val ok =
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          true
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+        }
       val dt = (System.nanoTime() - t0) / 1e9
       clearSessionState()
-      dt
+      if (ok) Some(dt) else None
     }
     // min-of-two discipline: queries at or above this first-run cost
     // re-run once and report the minimum (dev override: BENCH_ONCE
@@ -224,16 +235,17 @@ object Bench {
         else qsNode.properties().asScala
           .map(e => e.getKey -> e.getValue.asDouble()).toMap
       } catch { case _: Throwable => Map.empty }
-    val suiteRuns = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val d1 = once(name, fn)
-      val d =
-        if (benchOnce || d1 < minOfTwoFloorSec) d1
-        else {
-          val d2 = once(name, fn)
+    // a gate that fails on any run is left out of `queries`, the
+    // subtotals and the total, and listed under "failed" instead
+    val runs = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val d = once(name, fn).flatMap { d1 =>
+        if (benchOnce || d1 < minOfTwoFloorSec) Some(d1)
+        else once(name, fn).map { d2 =>
           if (benchDebug) System.err.println(
             f"[bench] $name runs: $d1%.3f / $d2%.3f")
           math.min(d1, d2)
         }
+      }
       name -> d
     }
     // ISOLATED RE-CHECK (SCALE.md §Bench, automated from r15): a query
@@ -248,18 +260,19 @@ object Bench {
     val isolationFactor = 1.5
     val isolated = scala.collection.mutable.LinkedHashMap
       .empty[String, (Double, Double)]
-    val results = suiteRuns.map { case (name, suite) =>
-      val outlier = !benchOnce && suite >= minOfTwoFloorSec &&
-        prior.get(name).exists(p => p > 0 && suite > p * isolationFactor)
-      if (!outlier) name -> suite
-      else {
-        val iso = once(name, selected(name))
-        System.err.println(f"[bench] isolated re-check $name: " +
-          f"suite=$suite%.3f isolated=$iso%.3f (prior=${prior(name)}%.3f)")
-        isolated(name) = (suite, iso)
-        name -> math.min(suite, iso)
-      }
+    val checked = runs.map {
+      case (name, Some(suite)) if !benchOnce && suite >= minOfTwoFloorSec &&
+          prior.get(name).exists(p => p > 0 && suite > p * isolationFactor) =>
+        name -> once(name, selected(name)).map { iso =>
+          System.err.println(f"[bench] isolated re-check $name: " +
+            f"suite=$suite%.3f isolated=$iso%.3f (prior=${prior(name)}%.3f)")
+          isolated(name) = (suite, iso)
+          math.min(suite, iso)
+        }
+      case other => other
     }
+    val failed = checked.collect { case (name, None) => name }
+    val results = checked.collect { case (name, Some(d)) => name -> d }
     val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
     val isoJson = isolated.map { case (k, (s, i)) =>
@@ -273,12 +286,15 @@ object Bench {
       "\"" + c + f"""\":${subtotals.getOrElse(c, 0.0)}%.3f""")
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // bench_schema 2 (r15): adds the "isolated" adjudication object and
     // records that x130/x131/x132/x136/x151 measure SERVE over shared
     // prebuilt fixtures since r14 — cross-round comparisons of those
     // gates and the serve/lifecycle subtotals start at schema 2.
+    // bench_schema 3: adds "failed"; a failed gate no longer carries a
+    // (partial) time in queries/subtotals/total.
     val full =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","bench_schema":2,"queries":$qs,"classes":$classes,"subtotals":$subJson,"isolated":$isoJson,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","bench_schema":3,"queries":$qs,"classes":$classes,"subtotals":$subJson,"isolated":$isoJson,"failed":$failedJson,"sf":"$sfDir"}"""
     println(full)
     // durable per-query artifact (java.nio is fine here: Bench is a
     // harness-local main, not engine code — same sanction as Verify's
@@ -295,5 +311,10 @@ object Bench {
     // stdout always contains one complete, parseable JSON object.
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir"}""")
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.length} gate(s) failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -1638,19 +1638,53 @@ object DedupOps {
       path: String, newDocs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5, asOfVersion: Option[Long] = None)
       : DataFrame = {
+    val (_, rejected) = minhashRejected(spark, path, newDocs, idCol,
+      textCol, threshold, asOfVersion)
+    newDocs.join(rejected, Seq(idCol), "left_anti")
+  }
+
+  /** [[minhashAdmit]] that ALSO returns the admitted rows' already-
+    * computed signatures, so the admit-then-append stream loop
+    * ([[graft.streaming.StreamIndex.minhashAdmitWriter]]) appends via
+    * [[appendToMinhashIndexSigs]] without tokenizing the batch a
+    * second time. Same decision as [[minhashAdmit]] bit-for-bit (one
+    * shared [[minhashRejected]]). The rejected-id set is materialized
+    * once (it anchors both anti-joins); the caller must
+    * [[Checkpoints.release]] BOTH returned frames after its terminal
+    * action (the admitted frame no longer embeds the signature
+    * checkpoint). */
+  private[graft] def minhashAdmitWithSigs(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      newDocs: DataFrame, idCol: String, textCol: String,
+      threshold: Double): (DataFrame, DataFrame) = {
+    val (inSig, rej) = minhashRejected(spark, path, newDocs, idCol,
+      textCol, threshold, None)
+    val rejected = Checkpoints.materialize(rej, reliable = false)
+    (newDocs.join(rejected, Seq(idCol), "left_anti"),
+      inSig.join(rejected.select(col(idCol).as("doc_id")),
+        Seq("doc_id"), "left_anti"))
+  }
+
+  /** The admission core shared by [[minhashAdmit]] and
+    * [[minhashAdmitWithSigs]]: the batch's signatures under the index's
+    * pinned params (materialized once — the band probe AND the verify
+    * read them: one tokenize pass over the batch instead of two), and
+    * the `idCol` ids with a verified near-dup among the LIVE indexed
+    * docs at the snapshot. Tombstoned docs neither collide nor verify,
+    * so a near-dup of a DELETED document admits again (the ledger
+    * forgets). */
+  private def minhashRejected(spark: org.apache.spark.sql.SparkSession,
+      path: String, newDocs: DataFrame, idCol: String, textCol: String,
+      threshold: Double, asOfVersion: Option[Long])
+      : (DataFrame, DataFrame) = {
     val snap = minhashSnapshot(spark, path, asOfVersion)
     val p = readMinhashTable(spark, path, snap, "params").head()
     val (n, bands, rows) =
       (p.getAs[Int]("n"), p.getAs[Int]("bands"), p.getAs[Int]("rows"))
     val k = bands * rows
-    // materialized once: the shingle+minhash pipeline is referenced by
-    // the band probe AND the signature verify — one tokenize pass over
-    // the batch instead of two (batch-bounded rows)
     val inSig = Checkpoints.materialize(
       minhashSigFrame(newDocs, idCol, textCol, n, k), reliable = false)
     val inBanded = minhashBandedFrame(inSig, bands, rows)
-    // live reads: tombstoned docs neither collide nor verify, so a
-    // near-dup of a DELETED document admits again (the ledger forgets)
     val corpusBanded = readMinhashTableLive(spark, path, snap, "banded")
     val cand = inBanded.select(col("doc_id").as("in_doc"), col("bucket"))
       .join(corpusBanded.select(col("doc_id").as("corpus_doc"),
@@ -1668,51 +1702,7 @@ object DedupOps {
           lit(k.toDouble), 6))
       .filter(col("est") >= threshold)
       .select(col("in_doc").as(idCol)).distinct()
-    newDocs.join(rejected, Seq(idCol), "left_anti")
-  }
-
-  /** [[minhashAdmit]] that ALSO returns the admitted rows' already-
-    * computed signatures, so the admit-then-append stream loop
-    * ([[graft.streaming.StreamIndex.minhashAdmitWriter]]) appends via
-    * [[appendToMinhashIndexSigs]] without tokenizing the batch a
-    * second time. Same decision as [[minhashAdmit]] bit-for-bit (same
-    * snapshot, params, and verify). The rejected-id set is
-    * materialized once (it anchors both anti-joins); the caller must
-    * [[Checkpoints.release]] BOTH returned frames after its terminal
-    * action (the admitted frame no longer embeds the signature
-    * checkpoint). */
-  private[graft] def minhashAdmitWithSigs(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      newDocs: DataFrame, idCol: String, textCol: String,
-      threshold: Double): (DataFrame, DataFrame) = {
-    val snap = minhashSnapshot(spark, path, None)
-    val p = readMinhashTable(spark, path, snap, "params").head()
-    val (n, bands, rows) =
-      (p.getAs[Int]("n"), p.getAs[Int]("bands"), p.getAs[Int]("rows"))
-    val k = bands * rows
-    val inSig = Checkpoints.materialize(
-      minhashSigFrame(newDocs, idCol, textCol, n, k), reliable = false)
-    val inBanded = minhashBandedFrame(inSig, bands, rows)
-    val corpusBanded = readMinhashTableLive(spark, path, snap, "banded")
-    val cand = inBanded.select(col("doc_id").as("in_doc"), col("bucket"))
-      .join(corpusBanded.select(col("doc_id").as("corpus_doc"),
-        col("bucket")), Seq("bucket"))
-      .select(col("in_doc"), col("corpus_doc")).distinct()
-    val corpusSigs = readMinhashTableLive(spark, path, snap, "sigs")
-    val rejected = Checkpoints.materialize(cand
-      .join(inSig.select(col("doc_id").as("in_doc"),
-        col("sig").as("sig_a")), Seq("in_doc"))
-      .join(corpusSigs.select(col("doc_id").as("corpus_doc"),
-        col("sig").as("sig_b")), Seq("corpus_doc"))
-      .withColumn("est", round(
-        size(filter(zip_with(col("sig_a"), col("sig_b"),
-          (x, y) => x === y), b => b)).cast(DoubleType) /
-          lit(k.toDouble), 6))
-      .filter(col("est") >= threshold)
-      .select(col("in_doc").as(idCol)).distinct(), reliable = false)
-    (newDocs.join(rejected, Seq(idCol), "left_anti"),
-      inSig.join(rejected.select(col(idCol).as("doc_id")),
-        Seq("doc_id"), "left_anti"))
+    (inSig, rejected)
   }
 
   /** [[appendToMinhashIndex]] from the admit's PRECOMPUTED signatures
@@ -1721,32 +1711,8 @@ object DedupOps {
     * idempotence contract. */
   private[graft] def appendToMinhashIndexSigs(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      sigs: DataFrame, batchId: String): Unit = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        !batchId.startsWith("compact_v") &&
-        !batchId.startsWith("retrain_v") &&
-        !batchId.startsWith("delete_") &&
-        batchId.forall(c =>
-          c.isLetterOrDigit || c == '-' || c == '_' || c == '.'),
-      "batchId must be a filesystem-safe token != 'base' and outside " +
-        s"the reserved 'compact_v'/'retrain_v'/'delete_' prefixes (got '$batchId')")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val snap = minhashSnapshot(spark, path)
-    if (snap.applied.contains(batchId)) return
-    val p = readMinhashTable(spark, path, snap, "params").head()
-    val seg = s"delta_$batchId"
-    writeMinhashSegmentSigs(sigs, path, seg,
-      p.getAs[Int]("bands"), p.getAs[Int]("rows"))
-    graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
-      val c = cur.getOrElse(snap)
-      if (c.applied.contains(batchId)) c // concurrent duplicate: no-op
-      else c.copy(
-        tables = c.tables ++ Seq("sigs", "banded").map(t =>
-          t -> (c.segs(t).filterNot(_ == seg) :+ seg)),
-        applied = c.applied :+ batchId)
-    }
-  }
+      sigs: DataFrame, batchId: String): Unit =
+    appendMinhashBatch(spark, path, batchId)((_, _) => sigs)
 
   /** Append a (typically just-admitted) batch's signatures to a
     * persisted [[saveMinhashIndex]] index — idempotent per `batchId`
@@ -1755,7 +1721,17 @@ object DedupOps {
     * the commit, late retries of compacted-away batches no-op). */
   def appendToMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, newDocs: DataFrame, idCol: String, textCol: String,
-      batchId: String): Unit = {
+      batchId: String): Unit =
+    appendMinhashBatch(spark, path, batchId)((n, k) =>
+      minhashSigFrame(newDocs, idCol, textCol, n, k))
+
+  /** The one append path behind [[appendToMinhashIndex]] and
+    * [[appendToMinhashIndexSigs]]: validate `batchId`, no-op if already
+    * applied, write the `delta_<batchId>` segment from `sigsFor(n, k)`
+    * (the index's pinned shingle size and signature length), commit. */
+  private def appendMinhashBatch(spark: org.apache.spark.sql.SparkSession,
+      path: String, batchId: String)(sigsFor: (Int, Int) => DataFrame)
+      : Unit = {
     require(batchId.nonEmpty && batchId != "base" &&
         !batchId.startsWith("compact_v") &&
         !batchId.startsWith("retrain_v") &&
@@ -1769,9 +1745,10 @@ object DedupOps {
     val snap = minhashSnapshot(spark, path)
     if (snap.applied.contains(batchId)) return
     val p = readMinhashTable(spark, path, snap, "params").head()
+    val (bands, rows) = (p.getAs[Int]("bands"), p.getAs[Int]("rows"))
     val seg = s"delta_$batchId"
-    writeMinhashSegment(newDocs, idCol, textCol, path, seg,
-      p.getAs[Int]("n"), p.getAs[Int]("bands"), p.getAs[Int]("rows"))
+    writeMinhashSegmentSigs(sigsFor(p.getAs[Int]("n"), bands * rows),
+      path, seg, bands, rows)
     graft.sinks.IndexManifest.commitMerge(fs, path) { cur =>
       val c = cur.getOrElse(snap)
       if (c.applied.contains(batchId)) c // concurrent duplicate: no-op

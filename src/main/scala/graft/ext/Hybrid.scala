@@ -42,32 +42,6 @@ object Hybrid {
       "bm25" -> latestVersion(spark, bm25Path),
       "ivf" -> latestVersion(spark, ivfPath)))
 
-  /** Daemon pool for overlapping the two INDEPENDENT index legs (the
-    * guide's overlap-independent-jobs discipline — the same rationale
-    * as StreamIndex's cdcApplyPool and TextAnalysis' segmentWritePool):
-    * the legs touch different paths and different manifests, and on an
-    * append batch the fixed per-job overhead — not the data — is the
-    * cost, so running them serially doubles the wall for nothing.
-    * Threads only block on Spark actions whose tasks the scheduler
-    * interleaves. */
-  private lazy val legPool =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(2, r => {
-        val t = new Thread(r, "hybrid-leg")
-        t.setDaemon(true)
-        t
-      }))
-
-  /** Run the two legs concurrently and propagate the first failure. */
-  private def runLegs(ops: Seq[() => Unit]): Unit = {
-    implicit val ec: scala.concurrent.ExecutionContext = legPool
-    scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(
-        ops.map(op => scala.concurrent.Future(op()))),
-      scala.concurrent.duration.Duration.Inf)
-    ()
-  }
-
   /** The dual CDC applier: land `batchId` in BOTH indexes, then commit
     * one pin naming the new pair. Each leg's append is idempotent on
     * its own `applied` record, so a replay (crash between the two
@@ -75,16 +49,18 @@ object Hybrid {
     * identical pair — the pin protocol needs no distributed
     * transaction, only the ORDER invariant: the pin commits LAST.
     * Readers meanwhile stay on the previous pin's coherent pair. The
-    * two legs run CONCURRENTLY (different paths, different manifests;
-    * no ordering exists between them — only the pin must come last):
-    * the serial form paid both legs' fixed per-job overhead
-    * back-to-back. */
+    * two legs run CONCURRENTLY under [[graft.exec.Overlap.all]]
+    * (different paths, different manifests; no ordering exists between
+    * them — only the pin must come last): the serial form paid both
+    * legs' fixed per-job overhead back-to-back. If a leg fails, the
+    * error surfaces only after the other leg has settled, so a retry
+    * never races a sibling still committing its manifest. */
   def dualAppend(spark: SparkSession, pinRoot: String,
       bm25Path: String, newDocs: DataFrame, docIdCol: String,
       textCol: String, ivfPath: String, newVecs: DataFrame,
       vecIdCol: String, vecCol: String, batchId: String)
       : PipelinePin.Pin = {
-    runLegs(Seq(
+    graft.exec.Overlap.all(spark)(Seq(
       () => TextAnalysis.appendToBm25Index(spark, bm25Path, newDocs,
         docIdCol, textCol, batchId),
       () => Similarity.appendToIvfIndex(spark, ivfPath, newVecs,
@@ -135,7 +111,7 @@ object Hybrid {
     val pfs = fs(spark, pinRoot)
     // the two leg vacuums are independent (different paths, each
     // reading its own live-pin set) — overlap them like dualAppend
-    runLegs(Seq(
+    graft.exec.Overlap.all(spark)(Seq(
       () => TextAnalysis.vacuumBm25Index(spark, bm25Path, keepVersions,
         PipelinePin.liveLegVersions(pfs, pinRoot, "bm25")),
       () => Similarity.vacuumIvfIndex(spark, ivfPath, keepVersions,

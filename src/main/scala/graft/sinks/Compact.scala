@@ -64,33 +64,30 @@ object Compact {
     * one Hadoop FS listing (works on local/HDFS/S3A alike); each then
     * runs [[compact]] as an independent BOUNDED job — size its own
     * bytes, one round-robin shuffle, write `ceil(bytes/targetBytes)`
-    * files under `out/<dir>`. At most `concurrency` partition jobs are
-    * in flight at once (Spark's scheduler interleaves concurrent jobs
-    * from driver threads), so peak cluster footprint is `concurrency`
-    * partitions, never the table — a 100 TB × 1000-day table is 1000
-    * small jobs draining through a bounded window, and an incremental
-    * run compacts only the partitions a streaming sink touched today
-    * instead of one table-wide shuffle. Output keeps the Hive layout:
-    * `out` reads back as the same partitioned table, row-for-row (gated
-    * x72, same identity-oracle discipline as x64).
+    * files under `out/<dir>`. At most `maxInFlight` partition jobs are
+    * in flight at once ([[graft.exec.Overlap.all]]; Spark's scheduler
+    * interleaves concurrent jobs from driver threads), so peak cluster
+    * footprint is `maxInFlight` partitions, never the table — a 100 TB
+    * × 1000-day table is 1000 small jobs draining through a bounded
+    * window, and an incremental run compacts only the partitions a
+    * streaming sink touched today instead of one table-wide shuffle.
+    * Output keeps the Hive layout: `out` reads back as the same
+    * partitioned table, row-for-row (gated x72, same identity-oracle
+    * discipline as x64).
     *
     * Returns partition-directory → files written, sorted by name.
     *
     * Failure contract: if any partition job throws, queued partitions
-    * are cancelled, in-flight ones are interrupted, and the pool is
-    * DRAINED before the error propagates — no worker is still writing
-    * under `out/` when the caller handles the failure. Completed
-    * `out/<dir>` directories are left in place (each is internally
-    * complete; rerunning overwrites them); an interrupted job aborts
-    * into Spark's uncommitted `_temporary` staging, never a committed
-    * dir — so a failed run leaves a partial but non-corrupt `out`. */
+    * are skipped, and partitions already started run to completion
+    * (they are not interrupted) before the first error propagates — no
+    * worker is still writing under `out/` when the caller handles the
+    * failure. Completed `out/<dir>` directories are left in place (each
+    * is internally complete; rerunning overwrites them), so a failed
+    * run leaves a partial but non-corrupt `out`. */
   def compactPartitioned(spark: SparkSession, base: String, out: String,
-      targetBytes: Long, concurrency: Int = 8): Seq[(String, Int)] = {
+      targetBytes: Long, maxInFlight: Int = 8): Seq[(String, Int)] = {
     import org.apache.hadoop.fs.Path
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     require(targetBytes > 0, s"targetBytes must be positive")
-    require(concurrency > 0, s"concurrency must be positive")
     val p = new Path(base)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(p), s"Compact: no such path: $base")
@@ -99,28 +96,8 @@ object Compact {
       .map(_.getPath.getName).sorted
     require(parts.nonEmpty,
       s"Compact: no Hive-layout partition directories under $base")
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(math.min(concurrency, parts.length))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val inFlight = parts.toSeq
-        .map(d => Future(d -> compact(spark, s"$base/$d", s"$out/$d", targetBytes)))
-      try inFlight.map(Await.result(_, Duration.Inf))
-      catch { case first: Throwable =>
-        // discard queued partitions, interrupt in-flight ones, and wait
-        // for the pool to drain: no worker may still be writing under
-        // out/ when the failure reaches the caller. (Await the POOL,
-        // not the futures — a discarded queued task never completes
-        // its promise.)
-        pool.shutdownNow()
-        pool.awaitTermination(Long.MaxValue,
-          java.util.concurrent.TimeUnit.NANOSECONDS)
-        throw first
-      }
-    } finally {
-      pool.shutdown()
-      pool.awaitTermination(Long.MaxValue,
-        java.util.concurrent.TimeUnit.NANOSECONDS)
-    }
+    graft.exec.Overlap.all(spark)(parts.toSeq.map(d => () =>
+      d -> compact(spark, s"$base/$d", s"$out/$d", targetBytes)),
+      maxInFlight)
   }
 }

@@ -73,9 +73,7 @@ object Upsert {
           .distinct()
         val affected = target.join(broadcast(srcParts),
           partitionCols.toIndexedSeq, "left_semi")
-        val kept = affected.join(
-          source.select(keys.map(col).toIndexedSeq: _*).distinct(),
-          keys.toIndexedSeq, "left_anti")
+        val kept = withoutKeysOf(affected, source, keys)
         val merged = kept.unionByName(source.select(target.columns.toIndexedSeq
           .map(col): _*))
           // bounded salt from the upsert keys: caps files per table
@@ -105,9 +103,7 @@ object Upsert {
       }
     } else {
       val target = spark.read.parquet(path)
-      val kept = target.join(
-        source.select(keys.map(col).toIndexedSeq: _*).distinct(),
-        keys.toIndexedSeq, "left_anti")
+      val kept = withoutKeysOf(target, source, keys)
       val merged = kept.unionByName(
         source.select(target.columns.toIndexedSeq.map(col): _*))
       merged.write.mode(SaveMode.Overwrite)
@@ -127,6 +123,19 @@ object Upsert {
         s"no upsert keys declared for table '$table'"))
     val partCols = if (keys.contains("date_start")) Seq("date_start") else Nil
     upsert(spark, s"$baseDir/$table", source, keys, partCols)
+  }
+
+  /** `target` rows whose key has no match in `source`, matched
+    * NULL-SAFELY (`<=>`): a key with a null part (an `ads_lead_insights`
+    * row with no age/gender breakdown) still equals its restated copy,
+    * so a re-load replaces it instead of appending a duplicate. */
+  private def withoutKeysOf(target: DataFrame, source: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    val srcKeys = source.select(keys.map(k => col(k).as(s"_src_$k")): _*)
+      .distinct()
+    target.join(srcKeys,
+      keys.map(k => target(k) <=> srcKeys(s"_src_$k")).reduce(_ && _),
+      "left_anti")
   }
 
   private def write(df: DataFrame, path: String, keys: Seq[String],

@@ -89,36 +89,6 @@ object StreamIndex {
       .getOrElse(0)
   }
 
-  /** Daemon pool for overlapping a CDC micro-batch's INDEPENDENT index
-    * legs (the guide's overlap-independent-jobs discipline, same
-    * rationale as TextAnalysis.segmentWritePool): per micro-batch the
-    * cost is fixed per-job overhead, not data, so the dual writer
-    * running its two index legs SERIALLY doubles the wall for nothing —
-    * the legs touch different paths and different manifests. Within a
-    * leg the delete-commits-before-append ordering is preserved (see
-    * bm25CdcWriter); these threads only BLOCK on Spark actions whose
-    * tasks the scheduler interleaves. */
-  private lazy val cdcApplyPool =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(4, r => {
-        val t = new Thread(r, "cdc-apply")
-        t.setDaemon(true)
-        t
-      }))
-
-  /** Run the batch's index mutations concurrently and propagate the
-    * first failure. */
-  private def runConcurrently(ops: Seq[() => Unit]): Unit =
-    if (ops.length <= 1) ops.foreach(_())
-    else {
-      implicit val ec: scala.concurrent.ExecutionContext = cdcApplyPool
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          ops.map(op => scala.concurrent.Future(op()))),
-        scala.concurrent.duration.Duration.Inf)
-      ()
-    }
-
   def bm25AppendWriter(spark: SparkSession, docsDir: String,
       schema: StructType, indexPath: String, idCol: String,
       textCol: String, compactEvery: Int = 0)
@@ -966,15 +936,16 @@ object StreamIndex {
           val (bid, nDel, nUp) = cdcBatchId(b, epoch, idCol, opCol,
             Seq(textCol, vecCol))
           // the two index LEGS are independent (different paths, no
-          // shared segment or manifest) and run CONCURRENTLY — the
-          // serial form doubled the per-batch wall for pure fixed
-          // per-job overhead. WITHIN each leg the combined tombstone
-          // pass still commits before the append starts (the
-          // bm25CdcWriter replay-safety ordering); only the pin commit
-          // below waits for both legs.
+          // shared segment or manifest) and run CONCURRENTLY under
+          // Overlap.all — the serial form doubled the per-batch wall
+          // for pure fixed per-job overhead. WITHIN each leg the
+          // combined tombstone pass still commits before the append
+          // starts (the bm25CdcWriter replay-safety ordering); only the
+          // pin commit below waits for both legs, and a failed leg
+          // surfaces only once its sibling has settled.
           val ids = b.select(col(idCol))
           val ups = b.filter(col(opCol) === "upsert")
-          runConcurrently(Seq(
+          graft.exec.Overlap.all(s)(Seq(
             () => {
               if (nDel + nUp > 0)
                 TextAnalysis.deleteFromBm25Index(s, bm25Path, ids,

@@ -33,6 +33,51 @@ class UpsertSpec extends SparkSpec {
     assert(got == Map(1L -> "a", 2L -> "b"))
   }
 
+  /** `ads_lead_insights` rows keyed (date_start, ad_id, age, gender,
+    * region) — the E3 full-outer join emits rows with no age/gender
+    * breakdown, i.e. null key parts. */
+  private def leadRows(rows: (String, String, String, String, Double)*) =
+    rows.map { case (d, ad, age, gender, spend) =>
+      (java.sql.Date.valueOf(d), ad, age, gender, "SP", spend)
+    }.toDF("date_start", "ad_id", "age", "gender", "region", "total_spend")
+
+  private def leadTable(p: String) = spark.read.parquet(p)
+    .selectExpr("CAST(date_start AS STRING)", "ad_id", "age", "gender",
+      "region", "total_spend")
+    .as[(String, String, String, String, String, Double)]
+    .collect().toSeq.sortBy(_.toString)
+
+  test("null key parts match null-safely: an ads_lead_insights load " +
+      "twice ≡ once") {
+    val base = Files.createTempDirectory("graft_upsert_nullkey").toString
+    val src = leadRows(("2024-01-01", "ad1", null, null, 1.0),
+      ("2024-01-01", "ad1", "25-34", "female", 2.0),
+      ("2024-01-02", "ad2", null, "male", 3.0))
+    Upsert.upsertTable(spark, base, "ads_lead_insights", src)
+    val once = leadTable(s"$base/ads_lead_insights")
+    assert(once.length == 3)
+    Upsert.upsertTable(spark, base, "ads_lead_insights", src)
+    assert(leadTable(s"$base/ads_lead_insights") == once)
+  }
+
+  test("a restated null-key row replaces the old one (partitioned and " +
+      "unpartitioned merge)") {
+    val keys = Seq("date_start", "ad_id", "age", "gender", "region")
+    val first = leadRows(("2024-01-01", "ad1", null, null, 1.0),
+      ("2024-01-01", "ad1", "25-34", "female", 2.0))
+    val restated = leadRows(("2024-01-01", "ad1", null, null, 9.0))
+    val want = Seq(
+      ("2024-01-01", "ad1", null, null, "SP", 9.0),
+      ("2024-01-01", "ad1", "25-34", "female", "SP", 2.0))
+      .sortBy(_.toString)
+    for (partCols <- Seq(Seq("date_start"), Nil)) {
+      val p = tmp()
+      Upsert.upsert(spark, p, first, keys, partCols)
+      Upsert.upsert(spark, p, restated, keys, partCols)
+      assert(leadTable(p) == want, s"partitionCols=$partCols")
+    }
+  }
+
   test("empty source is a no-op (K6, load.py:29-31)") {
     val p = tmp()
     Upsert.upsert(spark, p, Seq((1L, "a")).toDF("k", "v"), Seq("k"))
